@@ -6,7 +6,9 @@ One corpus is written in the two shapes the pipeline reads:
   ``{"dataset_id", "success", "data"}`` where ``data`` is the raw
   reaction JSON string ``format_reactions`` parses (integer enum
   codes, ``*List`` field names, heterogeneous ``inputsMap`` pairs).
-  A planted 0.1% of extra records carry truncated, unparseable data.
+  A planted 0.1% (at least two) of extra records carry truncated,
+  unparseable data, cut at fixed places: alternately inside the first
+  ``inputsMap`` pair object and inside ``outcomesList``.
 * ``docs/part-*.json``: the formatted document store
   ``read_ord_documents`` reads, one ``map<dataset_id, dataset>`` JSON
   object per file.
@@ -19,14 +21,11 @@ and 5% unsuccessful reactions. ``truth.json`` holds the counts the
 pipeline must reproduce.
 
 Reactions are assembled from pools of pre-rendered component and
-product fragments, so 20,000 reactions take about 4 s to generate. Run directly to materialise one corpus::
-
-    python3 perfbench/gen_ord.py OUT_DIR --seed 7 --reactions 20000
+product fragments, so 20,000 reactions take about 4 s to generate.
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 
@@ -55,6 +54,10 @@ EMPTY_SHARE = 0.02
 FAIL_SHARE = 0.05
 CORRUPT_SHARE = 0.001
 N_POOL = 1024
+N_FILES = 16  # more files than cores
+# Where planted truncations cut a scrape's data: right after the first
+# of these markers, taken in turn.
+CUT_AFTER = ['"componentsList": ', '"outcomesList": [']
 
 
 def _code(rng: np.random.Generator, n_domain: int, p=None) -> int:
@@ -146,8 +149,7 @@ def _hex_ids(rng: np.random.Generator, prefix: str, n: int) -> list[str]:
     return [prefix + row.tobytes().hex() for row in raw]
 
 
-def write_corpus(out_dir: str, seed: int, n_reactions: int,
-                 n_files: int = 16) -> dict:
+def write_corpus(out_dir: str, seed: int, n_reactions: int) -> dict:
     """Write raw/, docs/ and truth.json under ``out_dir``; return the
     truth dict."""
     rng = np.random.default_rng(seed)
@@ -158,13 +160,14 @@ def write_corpus(out_dir: str, seed: int, n_reactions: int,
     ds_ids = _hex_ids(rng, "ord_dataset-", n_datasets)
     rx_ids = _hex_ids(rng, "ord-", n_reactions)
 
-    raw_lines: list[list[str]] = [[] for _ in range(n_files)]
-    doc_parts: list[list[str]] = [[] for _ in range(n_files)]
+    raw_lines: list[list[str]] = [[] for _ in range(N_FILES)]
+    doc_parts: list[list[str]] = [[] for _ in range(N_FILES)]
     truth = {"n_reactions": n_reactions, "n_datasets": n_datasets,
              "datasets": {}, "component_rows": 0, "outcome_rows": 0}
+    succeeded = []  # (file, dataset id, raw data) of successful scrapes
     r = 0
     for d, (ds, size) in enumerate(zip(ds_ids, sizes)):
-        f = d % n_files
+        f = d % N_FILES
         fmt_rx, n_ok = [], 0
         for _ in range(int(size)):
             rid = rx_ids[r]
@@ -179,6 +182,7 @@ def write_corpus(out_dir: str, seed: int, n_reactions: int,
                 n_ok += 1
                 raw, fmt = _reaction(rng, rid, comps, prods, truth)
                 fmt_rx.append(fmt)
+                succeeded.append((f, ds, raw))
             raw_lines[f].append(json.dumps(
                 {"dataset_id": ds, "success": ok, "data": raw}))
         truth["datasets"][ds] = [int(size), n_ok]
@@ -187,23 +191,22 @@ def write_corpus(out_dir: str, seed: int, n_reactions: int,
             f'"total_reactions_scraped": {int(size)}, '
             f'"reactions": [{", ".join(fmt_rx)}]}}')
 
-    # Planted corrupt scrapes: a real record's data cut off halfway,
-    # as a scrape interrupted mid-response leaves it.
-    n_corrupt = max(1, int(round(CORRUPT_SHARE * n_reactions)))
+    # Planted corrupt scrapes: a successful record's data cut off, as a
+    # scrape interrupted mid-response leaves it. The cut places are
+    # fixed, so every seed plants the same kinds of damage.
+    n_corrupt = max(len(CUT_AFTER), int(round(CORRUPT_SHARE * n_reactions)))
     for i in range(n_corrupt):
-        f = int(rng.integers(0, n_files))
-        victim = json.loads(raw_lines[f][int(rng.integers(
-            0, len(raw_lines[f])))])
-        cut = victim["data"][: max(1, len(victim["data"]) // 2)]
+        f, ds, data = succeeded[int(rng.integers(0, len(succeeded)))]
+        marker = CUT_AFTER[i % len(CUT_AFTER)]
         raw_lines[f].append(json.dumps(
-            {"dataset_id": victim["dataset_id"], "success": True,
-             "data": cut}))
+            {"dataset_id": ds, "success": True,
+             "data": data[: data.index(marker) + len(marker)]}))
     truth["n_corrupt"] = n_corrupt
     truth["n_raw_records"] = n_reactions + n_corrupt
 
     for sub in ("raw", "docs"):
         os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
-    for f in range(n_files):
+    for f in range(N_FILES):
         with open(os.path.join(out_dir, "raw", f"part-{f:03d}.jsonl"),
                   "w", encoding="utf-8") as fh:
             fh.write("\n".join(raw_lines[f]) + "\n")
@@ -248,12 +251,3 @@ def _reaction(rng: np.random.Generator, rid: str, comps: list, prods: list,
            f'"outcomes": [{", ".join(fmt_products)}]}}')
     return raw, fmt
 
-
-if __name__ == "__main__":
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("out_dir")
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--reactions", type=int, default=20_000)
-    a = ap.parse_args()
-    t = write_corpus(a.out_dir, a.seed, a.reactions)
-    print(json.dumps({k: v for k, v in t.items() if k != "datasets"}))

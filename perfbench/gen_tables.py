@@ -7,15 +7,10 @@ value domains follow FIXTURES.md part B (uniform keys, TPC-H-ish
 enums, a 30-day event log, a 31-word document vocabulary with 5%
 near-duplicate documents, unit-norm 64-d embeddings). Row counts scale
 with ``sf`` the way the fact tables do at sf0.001..0.1.
-
-Run directly to materialise one directory::
-
-    python3 perfbench/gen_tables.py OUT_DIR --seed 7 --sf 0.01
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 
 import numpy as np
@@ -159,11 +154,3 @@ def write_tables(out_dir: str, seed: int, sf: float) -> None:
     for name, table in build_tables(seed, sf).items():
         pq.write_table(table, os.path.join(out_dir, f"{name}.parquet"))
 
-
-if __name__ == "__main__":
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("out_dir")
-    ap.add_argument("--seed", type=int, required=True)
-    ap.add_argument("--sf", type=float, default=0.01)
-    a = ap.parse_args()
-    write_tables(a.out_dir, a.seed, a.sf)

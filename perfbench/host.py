@@ -14,6 +14,7 @@ import os
 import threading
 
 _PAGE = os.sysconf("SC_PAGE_SIZE")
+INTERVAL_S = 0.1
 
 
 def _cpu_ticks() -> tuple[int, int]:
@@ -50,8 +51,7 @@ def _tree_rss(root: int) -> int:
 class HostMonitor:
     """Samples peak RSS and peak loadavg until :meth:`stop`."""
 
-    def __init__(self, interval_s: float = 0.1):
-        self.interval_s = interval_s
+    def __init__(self):
         self.nproc = len(os.sched_getaffinity(0))
         self.load_launch = os.getloadavg()[0]
         self.load_peak = self.load_launch
@@ -66,7 +66,7 @@ class HostMonitor:
 
     def _loop(self) -> None:
         me = os.getpid()
-        while not self._stop.wait(self.interval_s):
+        while not self._stop.wait(INTERVAL_S):
             self.peak_rss = max(self.peak_rss, _tree_rss(me))
             self.load_peak = max(self.load_peak, os.getloadavg()[0])
 

@@ -120,8 +120,7 @@ def layer_metrics(ctx, tracer, setup: dict, first_pass_s: float) -> dict:
     out = {k: median([m[k] for m in per_pass]) for k in per_pass[0]}
     out.update({"session.get_session_s": setup["session.get_session_s"],
                 "session.load_operators_s": setup["session.load_operators_s"],
-                "session.first_pass_s": first_pass_s,
-                "trace.overhead_s": tracer.overhead_s / len(pass_ids)})
+                "session.first_pass_s": first_pass_s})
     return out
 
 
@@ -139,11 +138,14 @@ def _one_pass(ctx, tracer, p: int) -> dict:
     for stage in ("format", "ingest", "flatten", "rollup", "renest"):
         m[f"ord.{stage}_s"] = m.pop(f"ord.{stage}_self_s", 0.0)
     m["ord_sink.write_s"] = m.pop("ord_sink.write_self_s", 0.0)
+    m["trace.check_s"] = m.pop("check_self_s", 0.0)
     m.update(_ord_outputs(ctx, kids))
     # operators: one span per query, named by its defining module
     for mod in OPERATOR_MODULES:
         m[f"operators.{mod}.s"] = m.pop(f"operators.{mod}_self_s", 0.0)
-    # stream and state, from the progress reports
+    # stream: the job call's self time, then the progress reports
+    m["stream.drain_s"] = sum((m.pop(k) for k in list(m) if k.startswith(
+        "stream.") and k.endswith("_self_s")), 0.0)
     m.update(_stream(kids))
     for k in [k for k in m if k.endswith("_self_s")]:
         del m[k]
@@ -154,14 +156,18 @@ def _one_pass(ctx, tracer, p: int) -> dict:
         m[f"python.{k}"] = sum(s["spark"][f"python.{k}"] for s in layer)
     for k in SPARK_COUNTERS:
         m[f"spark.{k}"] = float(sum(s["spark"][k] for s in layer))
-    wall = sum(s["end"] - s["start"] for s in layer)
+    wall = sum(s["end"] - s["start"] - s["read_s"] for s in layer)
     busy = sum(_union_s(s["spark"]["job_intervals"], s["start"], s["end"])
                for s in layer)
     m["spark.driver_only_s"] = wall - busy
     m["spark.idle_core_share"] = (
         1.0 - m["spark.executor_run_s"] / (wall * ctx.counters.cores)
         if wall > 0 else 0.0)
+    # Accounting: pass_s is the sum of the layer self times, check_s,
+    # unattributed_s and overhead_s.
+    m["trace.pass_s"] = spans[p]["end"] - spans[p]["start"]
     m["trace.unattributed_s"] = tracer.self_time(p)
+    m["trace.overhead_s"] = sum(s["read_s"] for _, s in kids)
     return m
 
 

@@ -252,41 +252,48 @@ class ProgressLog(StreamingQueryListener):
 class Tracer:
     """Spans kept in memory; counters attached at span close.
 
-    ``overhead_s`` is the time spent reading counters: what a traced
-    pass spends that an untraced one does not."""
+    A span's wall time includes reading its counters, which happens
+    just after it opens and just before it closes. That reading is the
+    span's ``read_s`` and is left out of its self time, so a parent's
+    self time never holds its children's reads. Summed over spans,
+    ``read_s`` is what a traced pass spends that an untraced one does
+    not; the self times of a pass and its spans plus that sum add up
+    to the pass's wall time."""
 
     def __init__(self, counters: SparkCounters, run_id: str):
         self.counters = counters
         self.run_id = run_id
         self.spans: list[dict] = []
-        self.overhead_s = 0.0
         self._stack: list[int] = []
 
     @contextmanager
     def span(self, name: str, spark_counters: bool = False):
-        t0 = time.perf_counter()
-        marks = self.counters.marks() if spark_counters else None
-        self.overhead_s += time.perf_counter() - t0
         rec = {"name": name, "run_id": self.run_id,
                "parent": self._stack[-1] if self._stack else None,
-               "start": time.time(), "end": None, "attrs": {}}
+               "start": time.time(), "end": None, "read_s": 0.0,
+               "attrs": {}}
         self.spans.append(rec)
         self._stack.append(len(self.spans) - 1)
+        t0 = time.perf_counter()
+        marks = self.counters.marks() if spark_counters else None
+        rec["read_s"] += time.perf_counter() - t0
         try:
             yield rec["attrs"]
         finally:
-            rec["end"] = time.time()
-            self._stack.pop()
             if marks is not None:
                 t0 = time.perf_counter()
                 rec["spark"] = self.counters.since(marks)
-                self.overhead_s += time.perf_counter() - t0
+                rec["read_s"] += time.perf_counter() - t0
+            self._stack.pop()
+            rec["end"] = time.time()
 
     def self_time(self, index: int) -> float:
+        """Wall time less the children's wall time and the span's own
+        counter reading."""
         rec = self.spans[index]
         children = sum(s["end"] - s["start"] for s in self.spans
                        if s["parent"] == index)
-        return rec["end"] - rec["start"] - children
+        return rec["end"] - rec["start"] - children - rec["read_s"]
 
     def write(self, path: str) -> None:
         out = [dict(s, self_s=self.self_time(i))

@@ -10,8 +10,8 @@
 * ``query_mix``: one closed-loop client running registered batch
   queries back to back, in an order shuffled from the seed, each
   result fetched to the client.
-* ``stream_replay``: ``availableNow`` catch-up drains of the events
-  replay through registered stateful streaming jobs.
+* ``stream_replay``: an ``availableNow`` catch-up drain of the events
+  replay through the registered stateful job ``stream_dedup_ttl``.
 
 ``query_mix`` warms up with an untimed first pass; ``ord_etl`` and
 ``stream_replay`` are measured cold, as their users meet them. Every
@@ -39,7 +39,7 @@ STREAM_SF = 0.001
 # A JVM-only relational query, a JVM-only iterative one, and one that
 # crosses the Arrow/pandas boundary into Python workers.
 MIX = ["agg_multi", "graph_pagerank", "udf_pandas_grouped_map"]
-STREAM_JOBS = ["stream_dedup_ttl"]
+STREAM_JOB = "stream_dedup_ttl"
 RAW_SCRAPE_SCHEMA = "dataset_id string, success boolean, data string"
 
 
@@ -219,9 +219,9 @@ class _Collected:
 
 class QueryMix:
     name = "query_mix"
-    # The mix's queries differ by 10x in cost, so the median of one
-    # pass is whichever query ranks third; the geometric mean weighs
-    # every query of the pass.
+    # The mix's queries differ about fivefold in cost, so the median of
+    # one pass is whichever query ranks second; the geometric mean
+    # weighs every query of the pass.
     latency = "geomean"
 
     def prepare(self, ctx: Ctx) -> None:
@@ -300,38 +300,33 @@ class StreamReplay:
             compare_full,
         )
         d = ctx.inputs["sf_dir"]
-        outputs, batches, rows, wall = [], [], 0, 0.0
-        for name in STREAM_JOBS:
-            ctx.attempted += 1
-            mark = ctx.progress.mark()
-            try:
-                with ctx.span(f"stream.{name}") as attrs:
-                    t0 = time.perf_counter()
-                    df = REGISTRY[name].fn(ctx.spark, d)
-                    call = time.perf_counter() - t0
-            except Exception:
-                ctx.fail(name, traceback.format_exc(limit=3))
-                continue
-            progress = ctx.progress.since(mark, ctx.counters)
-            attrs["progress"] = progress
-            attrs["call_s"] = call
-            wall += call
-            rows += sum(p["numInputRows"] for p in progress)
-            batches += [p["durationMs"]["triggerExecution"] / 1e3
-                        for p in progress]
-            outputs.append((name, df))
-        for name, df in outputs:  # untimed: oracle check of each drain
-            try:
-                with ctx.span("check", spark_counters=False):
-                    r = compare_full(df, REGISTRY[name].oracle, d, name,
-                                     fail_on_empty=True)
-            except Exception:
-                ctx.fail(name, traceback.format_exc(limit=3))
-                continue
+        spec = REGISTRY[STREAM_JOB]
+        ctx.attempted += 1
+        mark = ctx.progress.mark()
+        try:
+            with ctx.span(f"stream.{STREAM_JOB}") as attrs:
+                t0 = time.perf_counter()
+                df = spec.fn(ctx.spark, d)
+                wall = time.perf_counter() - t0
+        except Exception:
+            ctx.fail(STREAM_JOB, traceback.format_exc(limit=3))
+            return {"samples": [], "work": 0, "wall": 0.0}
+        progress = ctx.progress.since(mark, ctx.counters)
+        attrs["progress"] = progress
+        attrs["call_s"] = wall
+        try:  # untimed: oracle check of the drain
+            with ctx.span("check", spark_counters=False):
+                r = compare_full(df, spec.oracle, d, STREAM_JOB,
+                                 fail_on_empty=True)
             if not r.ok:
-                ctx.fail(name, r.message)
+                ctx.fail(STREAM_JOB, r.message)
+        except Exception:
+            ctx.fail(STREAM_JOB, traceback.format_exc(limit=3))
         _reset(ctx.spark)
-        return {"samples": batches, "work": rows, "wall": wall}
+        return {"samples": [p["durationMs"]["triggerExecution"] / 1e3
+                            for p in progress],
+                "work": sum(p["numInputRows"] for p in progress),
+                "wall": wall}
 
 
 WORKLOADS = {w.name: w for w in (OrdEtl(), QueryMix(), StreamReplay())}
