@@ -9,6 +9,10 @@ One corpus is written in the two shapes the pipeline reads:
   A planted 0.1% (at least two) of extra records carry truncated,
   unparseable data, cut at fixed places: alternately inside the first
   ``inputsMap`` pair object and inside ``outcomesList``.
+* ``probe.jsonl``: one more truncated scrape, kept out of ``raw/``: cut
+  right after the first ``"componentsList": ``, the one place where
+  ``format_reactions`` keeps the ``reactionId`` of corrupt data (a
+  known program defect; perfbench/README.md).
 * ``docs/part-*.json``: the formatted document store
   ``read_ord_documents`` reads, one ``map<dataset_id, dataset>`` JSON
   object per file.
@@ -57,7 +61,10 @@ N_POOL = 1024
 N_FILES = 16  # more files than cores
 # Where planted truncations cut a scrape's data: right after the first
 # of these markers, taken in turn.
-CUT_AFTER = ['"componentsList": ', '"outcomesList": [']
+CUT_AFTER = ['"componentsList": [', '"outcomesList": [']
+# Where the defect probe cuts: one character before the first cut
+# above, where the formatter keeps the reactionId.
+PROBE_CUT_AFTER = '"componentsList": '
 
 
 def _code(rng: np.random.Generator, n_domain: int, p=None) -> int:
@@ -203,6 +210,9 @@ def write_corpus(out_dir: str, seed: int, n_reactions: int) -> dict:
              "data": data[: data.index(marker) + len(marker)]}))
     truth["n_corrupt"] = n_corrupt
     truth["n_raw_records"] = n_reactions + n_corrupt
+    _, ds, data = succeeded[int(rng.integers(0, len(succeeded)))]
+    probe = json.dumps({"dataset_id": ds, "success": True, "data": data[
+        : data.index(PROBE_CUT_AFTER) + len(PROBE_CUT_AFTER)]})
 
     for sub in ("raw", "docs"):
         os.makedirs(os.path.join(out_dir, sub), exist_ok=True)
@@ -213,6 +223,9 @@ def write_corpus(out_dir: str, seed: int, n_reactions: int) -> dict:
         with open(os.path.join(out_dir, "docs", f"part-{f:03d}.json"),
                   "w", encoding="utf-8") as fh:
             fh.write("{" + ", ".join(doc_parts[f]) + "}")
+    with open(os.path.join(out_dir, "probe.jsonl"), "w",
+              encoding="utf-8") as fh:
+        fh.write(probe + "\n")
     with open(os.path.join(out_dir, "truth.json"), "w",
               encoding="utf-8") as fh:
         json.dump(truth, fh)

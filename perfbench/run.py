@@ -29,7 +29,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "open_reaction_database_web_scraper_spark"
 WORK = os.path.join(ROOT, ".perfbench_work")
 # Defining modules of the query_mix queries.
-OPERATOR_MODULES = ["aggregates", "graph", "udfs"]
+OPERATOR_MODULES = ["aggregates", "udfs"]
 SPARK_COUNTERS = ["jobs", "stages", "tasks", "failed_task_attempts",
                   "executor_run_s", "executor_cpu_s", "jvm_gc_s",
                   "input_bytes", "shuffle_write_bytes", "shuffle_read_bytes",
@@ -175,16 +175,17 @@ def _ord_outputs(ctx, kids) -> dict:
     """ord/ord_sink counts read from the pass's outputs (untimed)."""
     names = {s["name"]: s for _, s in kids}
     m = {"ord.error_records": 0.0, "ord.formatted_ratio": 0.0,
+         "ord.unflagged_corrupt_records": float(
+             ctx.notes.get("ord.unflagged_corrupt_records", 0)),
          "ord.renest_task_skew": 0.0, "ord_sink.rows": 0.0,
          "ord_sink.bytes": 0.0, "ord_sink.shards": 0.0}
     if "ord.format" not in names:
         return m
-    from pyspark.sql import functions as F
+    import workloads
     out = ctx.inputs["out"]
-    n_raw, n_ok = ctx.spark.read.parquet(os.path.join(out, "formatted")).agg(
-        F.count("*"), F.count("reaction_id")).first()
-    m["ord.error_records"] = float(n_raw - n_ok)
-    m["ord.formatted_ratio"] = n_ok / n_raw
+    n_raw, n_err = workloads.formatted_counts(out)
+    m["ord.error_records"] = float(n_err)
+    m["ord.formatted_ratio"] = (n_raw - n_err) / n_raw
     reads = names["ord.renest"]["spark"]["stage_reads"]
     agg_stage = max(reads, key=lambda r: r[1])[0]
     m["ord.renest_task_skew"] = ctx.counters.task_skew(agg_stage)
@@ -286,7 +287,8 @@ def run(args) -> int:
                 "samples": e2e["samples"], "timed_passes": len(passes),
                 "passes": [{k: v for k, v in p.items() if k != "work"}
                            for p in passes],
-                "first_pass_s": first_pass_s, "failures": ctx.failures}
+                "first_pass_s": first_pass_s, "failures": ctx.failures,
+                "notes": ctx.notes}
     finally:
         stop_session(spark)
     with open(os.path.join(WORK, f"run-{args.workload}-s{args.seed}"

@@ -36,9 +36,11 @@ import gen_tables
 ORD_REACTIONS = 1_000
 TABLES_SF = 0.01
 STREAM_SF = 0.001
-# A JVM-only relational query, a JVM-only iterative one, and one that
-# crosses the Arrow/pandas boundary into Python workers.
-MIX = ["agg_multi", "graph_pagerank", "udf_pandas_grouped_map"]
+# A JVM-only relational query and one that crosses the Arrow/pandas
+# boundary into Python workers. An iterative query (graph_pagerank)
+# would add about 8 s to every run, which the time budget for the
+# benchmark's runs does not leave.
+MIX = ["agg_multi", "udf_pandas_grouped_map"]
 STREAM_JOB = "stream_dedup_ttl"
 RAW_SCRAPE_SCHEMA = "dataset_id string, success boolean, data string"
 
@@ -53,6 +55,8 @@ class Ctx:
     tracer: object = None  # spans.Tracer while a traced pass runs
     attempted: int = 0
     failures: list[str] = field(default_factory=list)
+    # Findings about the program that are reported, not failures.
+    notes: dict = field(default_factory=dict)
     inputs: dict = field(default_factory=dict)
 
     def span(self, name: str, spark_counters: bool = True):
@@ -89,6 +93,14 @@ def _reset(spark) -> None:
 
 # ---------------------------------------------------------------------------
 # ord_etl
+
+
+def formatted_counts(out: str) -> tuple[int, int]:
+    """(rows, rows without a ``reaction_id``) of the formatted scrapes."""
+    import pyarrow.parquet as pq
+    ids = pq.read_table(os.path.join(out, "formatted"),
+                        columns=["reaction_id"]).column("reaction_id")
+    return len(ids), ids.null_count
 
 
 class OrdEtl:
@@ -135,8 +147,9 @@ class OrdEtl:
              .option("path", os.path.join(out, "sink")).save())
 
     def check(self, ctx: Ctx) -> list[str]:
-        """Compare the pass's outputs with the generator's truth."""
-        from pyspark.sql import functions as F
+        """Compare the pass's outputs with the generator's truth. The
+        outputs are read with pyarrow, not Spark."""
+        import pyarrow.parquet as pq
         truth, out = ctx.inputs["truth"], ctx.inputs["out"]
         problems = []
         with open(os.path.join(out, "sink", "_MANIFEST.json"),
@@ -145,21 +158,18 @@ class OrdEtl:
         if manifest["total_rows"] != truth["n_datasets"]:
             problems.append(f"sink rows {manifest['total_rows']} != "
                             f"{truth['n_datasets']} datasets")
-        spark = ctx.spark
-        fmt = spark.read.parquet(os.path.join(out, "formatted"))
-        n_raw, n_ok = fmt.agg(F.count("*"), F.count("reaction_id")).first()
-        if (n_raw, n_raw - n_ok) != (truth["n_raw_records"],
-                                     truth["n_corrupt"]):
-            problems.append(f"formatted {n_raw} rows / {n_raw - n_ok} errors "
+        n_raw, n_err = formatted_counts(out)
+        if (n_raw, n_err) != (truth["n_raw_records"], truth["n_corrupt"]):
+            problems.append(f"formatted {n_raw} rows / {n_err} errors "
                             f"!= {truth['n_raw_records']} / "
                             f"{truth['n_corrupt']}")
         for table, key in (("components", "component_rows"),
                            ("outcomes", "outcome_rows")):
-            n = spark.read.parquet(os.path.join(out, table)).count()
+            n = pq.read_table(os.path.join(out, table), columns=[]).num_rows
             if n != truth[key]:
                 problems.append(f"{table} {n} rows != {truth[key]}")
-        rollup = {r[0]: [r[1], r[2]] for r in spark.read.parquet(
-            os.path.join(out, "rollup")).collect()}
+        rollup = {k: [n, ok] for k, n, ok in zip(*pq.read_table(
+            os.path.join(out, "rollup")).to_pydict().values())}
         if rollup != truth["datasets"]:
             bad = sum(rollup.get(k) != v for k, v in truth["datasets"].items())
             problems.append(f"rollup differs on {bad} datasets")
@@ -174,6 +184,18 @@ class OrdEtl:
             problems.append("sink documents differ from the successful "
                             "reactions per dataset")
         return problems
+
+    def probe_defect(self, ctx: Ctx) -> int:
+        """Format the corpus's defect probe, a scrape cut right after
+        ``"componentsList": ``, and count the rows that keep a
+        ``reaction_id``: corrupt data the error side channel misses.
+        Reported as a finding, not a failure (README, "Known program
+        defect")."""
+        from open_reaction_database_web_scraper_spark.sources import ord as o
+        probe = (ctx.spark.read.schema(RAW_SCRAPE_SCHEMA)
+                 .json(os.path.join(ctx.inputs["corpus"], "probe.jsonl")))
+        return o.format_reactions(probe).where("reaction_id IS NOT NULL") \
+            .count()
 
     def first_pass(self, ctx: Ctx) -> None:
         """None: a batch ETL job starts in a fresh driver every time, so
@@ -192,6 +214,8 @@ class OrdEtl:
             return {"samples": [], "work": 0, "wall": 0.0}
         with ctx.span("check", spark_counters=False):
             problems = self.check(ctx)
+            ctx.notes["ord.unflagged_corrupt_records"] = \
+                self.probe_defect(ctx)
         if problems:
             ctx.fail("ord_etl check", "; ".join(problems))
         return {"samples": [wall], "work": ctx.inputs["truth"]["n_reactions"],
@@ -219,9 +243,10 @@ class _Collected:
 
 class QueryMix:
     name = "query_mix"
-    # The mix's queries differ about fivefold in cost, so the median of
-    # one pass is whichever query ranks second; the geometric mean
-    # weighs every query of the pass.
+    # The mix's two queries differ in cost, so the median of their
+    # samples falls in the gap between them, set by the slowest run of
+    # one and the fastest of the other; the geometric mean weighs
+    # every sample.
     latency = "geomean"
 
     def prepare(self, ctx: Ctx) -> None:
